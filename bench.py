@@ -42,7 +42,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hippo_claim_crossover_spark.plans import ALL_SPECS  # noqa: E402
-from hippo_claim_crossover_spark.session import get_spark  # noqa: E402
+from hippo_claim_crossover_spark.session import (  # noqa: E402
+    get_spark,
+    host_cpus,
+)
 
 # Headline set: one per major operator family (join/agg, windows, explode,
 # time windows, text, dedup, similarity, JSON).
@@ -394,12 +397,12 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     total_run1 = round(sum(timings_run1.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # r16 (VERDICT r15 #6): carry the core count in the detail and give
-    # non-default core counts their own detail file, so per-query
-    # scaling ratios (c8 vs c32) are computable from committed artifacts
-    # — a genuinely serial query (driver-loop rounds) is then
-    # distinguishable from the suite's per-job latency floor.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
+    # Carry the core count in the detail and give core counts other than
+    # 32 their own detail file, so per-query scaling ratios (c8 vs c32)
+    # are computable from committed artifacts — a genuinely serial query
+    # (driver-loop rounds) is then distinguishable from the suite's
+    # per-job latency floor.
+    cpus = host_cpus()
     detail = {
         "metric": "headline_queries_total_sec",
         "value": total,

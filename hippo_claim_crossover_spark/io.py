@@ -7,8 +7,14 @@ render (``:316``). Our engine's canonical storage is columnar Parquet
 the properties a 100 TB scan actually needs.
 
 Schemas are declared explicitly (never ``inferSchema`` on a production
-path, SURVEY.md §1.4) and asserted against what the files carry, so a
-fixture drift fails loudly instead of silently changing types.
+path, SURVEY.md §1.4): ``load_table`` reads every fixture with its
+``SCHEMAS`` entry, so a table load starts no Spark job. What the files
+carry is still checked, once per file version per process: the first
+read of a path infers its footer schema and raises on any name or type
+that differs from the declaration, so a fixture drift fails loudly
+instead of silently changing types. The same check detects the legacy
+``events`` files that store ``ts`` as TIMESTAMP(NANOS) and routes them
+to a read that truncates ``ts`` to microseconds.
 """
 
 from __future__ import annotations
@@ -129,63 +135,118 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table; Parquet carries the schema, Catalyst prunes
-    columns/pushes filters into the scan automatically."""
+    """Read one fixture table with its declared ``SCHEMAS`` entry, so the
+    read starts no schema-inference job; Catalyst still prunes columns and
+    pushes filters into the scan.
+
+    The file's own schema is checked against the declaration (column
+    names and types; parquet matches columns by name, so their order in
+    the file is free) once per file version per process: the first read
+    of a path infers its footer schema with one Spark job, and later
+    reads of the same path skip the check while its data files' sizes
+    and mtimes are unchanged. A rewritten file is checked again. A
+    mismatch raises ``ValueError`` naming the table. The same check
+    decides the legacy ``events`` read (see ``_read_nanos_events``)."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if _check_footer(spark, name, path):
+        return _read_nanos_events(spark, path)
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Footer-check memo: path -> (file version, stores events.ts as nanos).
+_CHECKED: dict[str, tuple[tuple, bool]] = {}
+
+# What a legacy TIMESTAMP(NANOS) ``events`` file infers under
+# ``spark.sql.legacy.parquet.nanosAsLong``, and what its read declares:
+# ``ts`` as long nanoseconds.
+_EVENTS_NANOS = T.StructType([
+    T.StructField(f.name, T.LongType() if f.name == "ts" else f.dataType)
+    for f in SCHEMAS["events"].fields])
+
+
+def _file_version(path: str) -> tuple | None:
+    """``(name, size, mtime_ns)`` of every file at or under ``path``, or
+    None when the path cannot be stat'ed locally (then nothing is
+    memoized and every read checks)."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (("", st.st_size, st.st_mtime_ns),)
+        version = []
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames.sort()
+            for n in sorted(filenames):
+                fp = os.path.join(dirpath, n)
+                st = os.stat(fp)
+                version.append((os.path.relpath(fp, path), st.st_size,
+                                st.st_mtime_ns))
+        return tuple(version)
+    except OSError:
+        return None
+
+
+def _check_footer(spark: SparkSession, name: str, path: str) -> bool:
+    """Check ``path``'s parquet schema against ``SCHEMAS[name]`` unless
+    this file version already passed; True iff it is a legacy ``events``
+    file storing ``ts`` as TIMESTAMP(NANOS).
+
+    Inference is where a nanos footer throws (Spark's parquet schema
+    converter rejects the type), so only that failure, on ``events``,
+    falls through to a second inference under the legacy conf. Any
+    other failure (missing file, corrupt footer) re-raises as itself.
+    The conf is scoped to that inference."""
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    version = _file_version(path)
+    hit = _CHECKED.get(path)
+    if version is not None and hit is not None and hit[0] == version:
+        return hit[1]
+    want, nanos = SCHEMAS[name], False
+    try:
+        got = spark.read.parquet(path).schema
+    except AnalysisException as e:
+        if name != "events" or e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        want, nanos = _EVENTS_NANOS, True
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            got = spark.read.parquet(path).schema
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+    if ({f.name: f.dataType for f in got.fields}
+            != {f.name: f.dataType for f in want.fields}):
+        raise ValueError(
+            f"table {name!r}: {path} has schema {got.simpleString()}, "
+            f"declared {want.simpleString()}")
+    if version is not None:
+        _CHECKED[path] = (version, nanos)
+    return nanos
+
+
+def _read_nanos_events(spark: SparkSession, path: str) -> DataFrame:
     """Current fixtures store ``ts`` as plain TIMESTAMP(MICROS) (untagged,
     so Spark resolves TIMESTAMP_NTZ — the same type ``o_orderdate`` /
     ``l_shipdate`` carry, and what DuckDB's naive TIMESTAMP compares
     against). Earlier fixture generations stored TIMESTAMP(NANOS), which
-    Spark's parquet schema converter rejects at read-resolution time; keep
-    that read path as a fallback so the loader works against either
-    generation of files.
+    Spark's parquet schema converter rejects; this path reads them so the
+    loader works against either generation of files.
 
-    In the fallback, ``ts div 1000`` is exact LONG integer division (a
-    double division would round at 2^53 and can flip the last
-    microsecond) — the same truncation DuckDB applies casting
+    A declared LONG ``ts`` reads the nanos column as its raw INT64 value
+    without the legacy conf. ``ts div 1000`` is exact LONG integer
+    division (a double division would round at 2^53 and can flip the
+    last microsecond) — the same truncation DuckDB applies casting
     TIMESTAMP_NS → TIMESTAMP; the ``timestamp_micros`` result (LTZ) is
     cast to ``timestamp_ntz`` so both read paths emit the declared schema
     type and downstream ts-derived columns cannot flip type with the
-    fixture generation.
-
-    The primary read passes the declared schema explicitly, so the ts
-    type does not silently depend on
-    ``spark.sql.parquet.inferTimestampNTZ.enabled``; only the nanos
-    schema-conversion failure falls through to the legacy path — any
-    other failure (missing file, corrupt footer) re-raises as itself.
-    The legacy conf is scoped to the read: the parquet relation captures
-    it at analysis time, so save/restore keeps the session's handling of
-    any other TIMESTAMP(NANOS) parquet unchanged."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        # Footer probe: schema inference is where a TIMESTAMP(NANOS)
-        # footer throws (an explicit-schema read would defer the failure
-        # to execution time, past this fallback).
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    except AnalysisException:  # legacy nanos footer: conversion throws
-        pass
-    else:
-        return spark.read.schema(SCHEMAS["events"]).parquet(
-            f"{sf_dir}/events.parquet")
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return raw.select(
+    fixture generation."""
+    return spark.read.schema(_EVENTS_NANOS).parquet(path).select(
         "event_id",
         F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
         .alias("ts"),

@@ -7,7 +7,7 @@ compute the same *exact* results with every stage distributed, the same way
 a TeraSort distributes a global sort:
 
 1. ``repartitionByRange`` on the order key (sampled range boundaries —
-   Spark's distributed sort machinery; deterministic sampling seed);
+   Spark's distributed sort machinery);
 2. a per-partition local ``row_number`` (window partitioned by the range
    partition id — each partition ranks independently);
 3. partition-count prefix offsets turning local ranks into global ranks —
@@ -17,13 +17,48 @@ a TeraSort distributes a global sort:
 
 The order columns must form a unique key (add a tiebreaker id) — the same
 requirement engine-deterministic ntile has anywhere.
+
+Steps 2 and 3 read the range shuffle twice (rows, and per-partition
+counts), and its boundaries are only stable within ONE evaluation: once
+the input outgrows the range sample (few partitions, many rows), the
+sample is random per evaluation. So every operator here runs on the
+frame cut down to the columns both reads need (:func:`_on_key`); the
+two reads then plan the same exchange, which Spark reuses, and any
+other column is joined back on the key afterwards.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _on_key(df: DataFrame, key_cols: list[str], value_cols: list[str],
+            op: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """Run ``op`` on ``df`` cut down to ``key_cols`` + ``value_cols``
+    and join every other column back on ``key_cols`` (null-safe), so
+    the range shuffle inside ``op`` carries exactly the columns both of
+    its reads need and is evaluated once. A frame with other columns
+    must be unique on ``key_cols``."""
+    cols = key_cols + [c for c in value_cols if c not in key_cols]
+    out = op(df.select(*cols))
+    rest = [c for c in df.columns if c not in cols]
+    if not rest:
+        return out
+    added = [c for c in out.columns if c not in cols]
+    r = out.alias("_r")
+    p = df.select(*key_cols, *rest).alias("_p")
+    on = reduce(lambda a, b: a & b,
+                [F.col(f"_r.`{c}`").eqNullSafe(F.col(f"_p.`{c}`"))
+                 for c in key_cols])
+    return r.join(p, on).select(
+        *[F.col(f"_p.`{c}`" if c in rest else f"_r.`{c}`")
+          for c in df.columns],
+        *[F.col(f"_r.`{c}`") for c in added])
 
 
 def global_rank(df: DataFrame, order_cols: list[str],
@@ -34,22 +69,28 @@ def global_rank(df: DataFrame, order_cols: list[str],
     stage: range-shuffle + per-partition window + broadcast prefix
     offsets. Adds ``out_col``; drops nothing."""
     parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-              .withColumn("_pid", F.spark_partition_id()))
-    local_w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(local_w))
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Prefix offsets over the tiny per-partition counts table (≤ parts
-    # rows): a single-partition window HERE is over partition COUNTS,
-    # not data — broadcast-sized by construction.
-    off_w = (Window.orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"))
-    return (local.join(F.broadcast(offsets), "_pid")
-            .withColumn(out_col, F.col("_lrn") + F.col("_off"))
-            .drop("_pid", "_lrn", "_off"))
+
+    def rank(d: DataFrame) -> DataFrame:
+        ranged = (d.repartitionByRange(parts,
+                                       *[F.col(c) for c in order_cols])
+                  .withColumn("_pid", F.spark_partition_id()))
+        local_w = Window.partitionBy("_pid").orderBy(*order_cols)
+        local = ranged.withColumn("_lrn", F.row_number().over(local_w))
+        counts = local.groupBy("_pid").agg(
+            F.count(F.lit(1)).alias("_cnt"))
+        # Prefix offsets over the tiny per-partition counts table (≤
+        # parts rows): a single-partition window HERE is over partition
+        # COUNTS, not data — broadcast-sized by construction.
+        off_w = (Window.orderBy("_pid")
+                 .rowsBetween(Window.unboundedPreceding, -1))
+        offsets = counts.select(
+            "_pid",
+            F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"))
+        return (local.join(F.broadcast(offsets), "_pid")
+                .withColumn(out_col, F.col("_lrn") + F.col("_off"))
+                .drop("_pid", "_lrn", "_off"))
+
+    return _on_key(df, order_cols, [], rank)
 
 
 def grouped_global_rank(df: DataFrame, group_cols: list[str],
@@ -77,7 +118,9 @@ def grouped_global_rank(df: DataFrame, group_cols: list[str],
 
     Ranks among EQUAL order keys are arbitrary (they stay within one
     partition); use a unique key when that matters — rank-indexed value
-    lookup (percentiles) is insensitive to tie order by definition.
+    lookup (percentiles) is insensitive to tie order by definition. A
+    frame with columns outside (group ++ order) must be unique on it:
+    those columns are joined back on the key (:func:`_on_key`).
 
     ``broadcast_offsets`` encodes the LOW-CARDINALITY GROUPING CONTRACT
     every in-repo caller satisfies (percentiles/Gini/NTILE over
@@ -88,23 +131,28 @@ def grouped_global_rank(df: DataFrame, group_cols: list[str],
     already-aggregated counts table; never an OOM).
     """
     parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in group_cols + order_cols]
-    ranged = (df.repartitionByRange(parts, *keys)
-              .withColumn("_pid", F.spark_partition_id()))
-    local_w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(local_w))
-    counts = (local.groupBy("_pid", *group_cols)
-              .agg(F.count(F.lit(1)).alias("_cnt")))
-    off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = counts.select(
-        "_pid", *group_cols,
-        F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"))
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
-    return (local.join(offsets, ["_pid", *group_cols])
-            .withColumn(out_col, F.col("_lrn") + F.col("_off"))
-            .drop("_pid", "_lrn", "_off"))
+
+    def rank(d: DataFrame) -> DataFrame:
+        keys = [F.col(c) for c in group_cols + order_cols]
+        ranged = (d.repartitionByRange(parts, *keys)
+                  .withColumn("_pid", F.spark_partition_id()))
+        local_w = (Window.partitionBy("_pid", *group_cols)
+                   .orderBy(*order_cols))
+        local = ranged.withColumn("_lrn", F.row_number().over(local_w))
+        counts = (local.groupBy("_pid", *group_cols)
+                  .agg(F.count(F.lit(1)).alias("_cnt")))
+        off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
+                 .rowsBetween(Window.unboundedPreceding, -1))
+        offsets = counts.select(
+            "_pid", *group_cols,
+            F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"))
+        if broadcast_offsets:
+            offsets = F.broadcast(offsets)
+        return (local.join(offsets, ["_pid", *group_cols])
+                .withColumn(out_col, F.col("_lrn") + F.col("_off"))
+                .drop("_pid", "_lrn", "_off"))
+
+    return _on_key(df, group_cols + order_cols, [], rank)
 
 
 def grouped_histogram_cdf(hist: DataFrame, group_cols: list[str],
@@ -120,24 +168,29 @@ def grouped_histogram_cdf(hist: DataFrame, group_cols: list[str],
     counting rows. Rows must be unique per (group, value); NULLs are
     the caller's problem."""
     parts = n_partitions or hist.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in group_cols + [value_col]]
-    ranged = (hist.repartitionByRange(parts, *keys)
-              .withColumn("_pid", F.spark_partition_id()))
-    local_w = (Window.partitionBy("_pid", *group_cols).orderBy(value_col)
-               .rowsBetween(Window.unboundedPreceding, 0))
-    local = ranged.withColumn("_lcum", F.sum(cnt_col).over(local_w))
-    totals = (local.groupBy("_pid", *group_cols)
-              .agg(F.sum(cnt_col).alias("_tot")))
-    off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "_pid", *group_cols,
-        F.coalesce(F.sum("_tot").over(off_w), F.lit(0)).alias("_off"))
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
-    return (local.join(offsets, ["_pid", *group_cols])
-            .withColumn("_cum", F.col("_lcum") + F.col("_off"))
-            .drop("_pid", "_lcum", "_off"))
+
+    def cdf(d: DataFrame) -> DataFrame:
+        keys = [F.col(c) for c in group_cols + [value_col]]
+        ranged = (d.repartitionByRange(parts, *keys)
+                  .withColumn("_pid", F.spark_partition_id()))
+        local_w = (Window.partitionBy("_pid", *group_cols)
+                   .orderBy(value_col)
+                   .rowsBetween(Window.unboundedPreceding, 0))
+        local = ranged.withColumn("_lcum", F.sum(cnt_col).over(local_w))
+        totals = (local.groupBy("_pid", *group_cols)
+                  .agg(F.sum(cnt_col).alias("_tot")))
+        off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
+                 .rowsBetween(Window.unboundedPreceding, -1))
+        offsets = totals.select(
+            "_pid", *group_cols,
+            F.coalesce(F.sum("_tot").over(off_w), F.lit(0)).alias("_off"))
+        if broadcast_offsets:
+            offsets = F.broadcast(offsets)
+        return (local.join(offsets, ["_pid", *group_cols])
+                .withColumn("_cum", F.col("_lcum") + F.col("_off"))
+                .drop("_pid", "_lcum", "_off"))
+
+    return _on_key(hist, group_cols + [value_col], [cnt_col], cdf)
 
 
 def grouped_exact_percentiles(df: DataFrame, group_cols: list[str],
@@ -420,27 +473,33 @@ def global_cumsum(df: DataFrame, order_cols: list[str],
     (long) for the offsets to stay exact.
     """
     parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-              .withColumn("_pid", F.spark_partition_id()))
-    local_w = (Window.partitionBy("_pid").orderBy(*order_cols)
-               .rowsBetween(Window.unboundedPreceding, 0))
-    local = ranged
-    for c in sum_cols:
-        local = local.withColumn(f"_l{c}", F.sum(c).over(local_w))
-    totals = local.groupBy("_pid").agg(
-        *[F.sum(c).alias(f"_t{c}") for c in sum_cols])
-    off_w = (Window.orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        "_pid",
-        *[F.coalesce(F.sum(f"_t{c}").over(off_w), F.lit(0))
-          .alias(f"_o{c}") for c in sum_cols])
-    out = local.join(F.broadcast(offsets), "_pid")
-    for c in sum_cols:
-        out = out.withColumn(prefix + c, F.col(f"_l{c}") + F.col(f"_o{c}"))
-    return out.drop("_pid",
-                    *[f"_l{c}" for c in sum_cols],
-                    *[f"_o{c}" for c in sum_cols])
+
+    def cumsum(d: DataFrame) -> DataFrame:
+        ranged = (d.repartitionByRange(parts,
+                                       *[F.col(c) for c in order_cols])
+                  .withColumn("_pid", F.spark_partition_id()))
+        local_w = (Window.partitionBy("_pid").orderBy(*order_cols)
+                   .rowsBetween(Window.unboundedPreceding, 0))
+        local = ranged
+        for c in sum_cols:
+            local = local.withColumn(f"_l{c}", F.sum(c).over(local_w))
+        totals = local.groupBy("_pid").agg(
+            *[F.sum(c).alias(f"_t{c}") for c in sum_cols])
+        off_w = (Window.orderBy("_pid")
+                 .rowsBetween(Window.unboundedPreceding, -1))
+        offsets = totals.select(
+            "_pid",
+            *[F.coalesce(F.sum(f"_t{c}").over(off_w), F.lit(0))
+              .alias(f"_o{c}") for c in sum_cols])
+        out = local.join(F.broadcast(offsets), "_pid")
+        for c in sum_cols:
+            out = out.withColumn(prefix + c,
+                                 F.col(f"_l{c}") + F.col(f"_o{c}"))
+        return out.drop("_pid",
+                        *[f"_l{c}" for c in sum_cols],
+                        *[f"_o{c}" for c in sum_cols])
+
+    return _on_key(df, order_cols, sum_cols, cumsum)
 
 
 def grouped_quantile_summary(df: DataFrame, group_cols: list[str],

@@ -50,11 +50,11 @@ def _materialize(spark: SparkSession, sf_dir: str, fmt: str,
     is INPUT SETUP (the stand-in for an upstream table), so one
     materialization per (app, sf, format) is the honest treatment and
     repeated plan builds read steady state. ``per_run=True`` (sink
-    queries, r16 — VERDICT r15 #5): the write IS the declared operator,
-    so every call gets a fresh run-numbered dir and pays the write —
-    best-of-N bench runs now time the sink, not an exists-guard
-    short-circuit. Abandoned run dirs are app-id-tagged and reclaimed
-    by the stale-scratch pruner."""
+    queries): the write IS the declared operator, so every call gets a
+    fresh run-numbered dir and pays the write — best-of-N bench runs
+    time the sink, not an exists-guard short-circuit. Abandoned run
+    dirs are app-id-tagged and reclaimed by the stale-scratch pruner.
+    ``last_written`` returns the directory of the latest call."""
     key = (spark.sparkContext.applicationId, sf_dir, fmt)
     if per_run:
         n = _RUN_SEQ.get(key, 0) + 1
@@ -68,6 +68,15 @@ def _materialize(spark: SparkSession, sf_dir: str, fmt: str,
         write(out)
         _READY.add(key)
     return out
+
+
+def last_written(spark: SparkSession, sf_dir: str, fmt: str) -> str:
+    """Directory the latest ``_materialize`` call for (this session,
+    ``sf_dir``, ``fmt``) returned: the run-numbered one for a per-run
+    sink, else the fixed one."""
+    out = os.path.join(_SCRATCH, f"src_{fmt}-{_tag(spark, sf_dir)}")
+    n = _RUN_SEQ.get((spark.sparkContext.applicationId, sf_dir, fmt))
+    return f"{out}-r{n}" if n else out
 
 
 def q_part_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

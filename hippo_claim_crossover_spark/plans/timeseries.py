@@ -2214,8 +2214,12 @@ def q_stream_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
             land_batch_file(ev.where(F.col("event_id") % 3 == landing),
                             src, landing)
         stream = read_event_stream(spark, src, max_files_per_trigger=1)
-        write_foreach_batch(stream.select("event_id", "value"), out, ckpt)
-    sunk = spark.read.parquet(out)
+        sink = stream.select("event_id", "value")
+        write_foreach_batch(sink, out, ckpt)
+    # read back with the schema the writer gave its files: the sunk
+    # columns plus the ``F.lit(batch_id)`` stamp
+    sunk = spark.read.schema(
+        sink.withColumn("batch_id", F.lit(0)).schema).parquet(out)
     return (sunk.groupBy((F.col("event_id") % 3).alias("split"))
             .agg(F.count_distinct("batch_id").alias("n_sink_batches"),
                  F.count(F.lit(1)).alias("n_events"),

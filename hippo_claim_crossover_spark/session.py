@@ -122,13 +122,20 @@ _DEFAULTS = {
 }
 
 
+def host_cpus() -> int:
+    """Core count for the default ``local[N]`` master:
+    ``SPARK_GRAFT_CPUS`` when set, otherwise the CPUs this process may
+    run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "hippo_claim_crossover_spark",
               master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{cpus}]")
+    builder = builder.master(master or f"local[{host_cpus()}]")
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)

@@ -1,10 +1,12 @@
 """I/O discipline tests: partitioned writes give partition-pruned reads,
-and write-side coalesce bounds file counts."""
+write-side coalesce bounds file counts, and ``load_table`` reads with the
+declared schema behind a once-per-file-version footer check."""
 
 from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.io import load_table, write_parquet
@@ -48,11 +50,10 @@ def test_clustered_sink_ranges_are_disjoint(spark, sf_dir):
 
     # executing the query materializes the clustered copy
     assert ALL_SPECS["q_sink_clustered"].fn(spark, sf_dir).count() > 0
-    from hippo_claim_crossover_spark.plans.sources import _tag
+    from hippo_claim_crossover_spark.plans.sources import last_written
 
     paths = glob.glob(
-        f"/root/repo/_scratch/src_clustered-{_tag(spark, sf_dir)}/"
-        "part-*.parquet")
+        f"{last_written(spark, sf_dir, 'clustered')}/part-*.parquet")
     assert len(paths) >= 2
     spans = []
     for p in paths:
@@ -106,12 +107,11 @@ def test_zorder_sink_has_2d_locality(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from hippo_claim_crossover_spark.plans import ALL_SPECS
-    from hippo_claim_crossover_spark.plans.sources import _tag
+    from hippo_claim_crossover_spark.plans.sources import last_written
 
     assert ALL_SPECS["q_sink_zorder"].fn(spark, sf_dir).count() > 0
     paths = glob.glob(
-        f"/root/repo/_scratch/src_zorder-{_tag(spark, sf_dir)}/"
-        "part-*.parquet")
+        f"{last_written(spark, sf_dir, 'zorder')}/part-*.parquet")
     assert len(paths) >= 4
     spans = {"l_partkey": [], "l_suppkey": []}
     domain = {}
@@ -289,3 +289,103 @@ def test_local_frame_stays_on_the_arrow_path(spark):
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan2 and "ExistingRDD" not in plan2
     assert df2.collect() == [(7, "z")]
+
+
+# ---- scan contract: declared schema, one footer check per file version
+
+
+def _fixture_copy(sf_dir, tmp_path, name, cast=None, layout="file"):
+    """Write ``name`` from ``sf_dir`` into ``tmp_path`` with pyarrow,
+    optionally casting columns (``{column: arrow type}``), as one file or
+    (``layout="dir"``) as a directory holding one part file; returns the
+    new sf dir."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{sf_dir}/{name}.parquet")
+    for col, typ in (cast or {}).items():
+        i = tbl.schema.get_field_index(col)
+        tbl = tbl.set_column(i, col, tbl.column(col).cast(typ))
+    out = tmp_path / f"{name}.parquet"
+    if layout == "dir":
+        out.mkdir(exist_ok=True)
+        out = out / "part-0.parquet"
+    pq.write_table(tbl, str(out))
+    return str(tmp_path)
+
+
+def _jobs_started(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` starts, seen through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "scan contract")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_footer_disagreeing_with_declared_schema_raises(spark, sf_dir,
+                                                        tmp_path):
+    import pyarrow as pa
+
+    d = _fixture_copy(sf_dir, tmp_path, "lineitem",
+                      cast={"l_linenumber": pa.int64()})
+    with pytest.raises(ValueError, match="'lineitem'") as err:
+        load_table(spark, d, "lineitem")
+    assert "l_linenumber:bigint" in str(err.value)
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_footer_check_runs_once_per_file_version(spark, sf_dir, tmp_path,
+                                                 layout):
+    """The first load of a path infers its schema (one job); a second load
+    of the unchanged file reads with the declared schema alone and starts
+    no job. A rewrite at the same path is a new file version: a
+    same-schema rewrite runs the check again, a drifted one raises."""
+    import pyarrow as pa
+
+    from hippo_claim_crossover_spark.io import SCHEMAS
+
+    d = _fixture_copy(sf_dir, tmp_path, "nation", layout=layout)
+    assert _jobs_started(spark, f"scan-first-{layout}",
+                         lambda: load_table(spark, d, "nation"))
+    loaded = []
+    assert _jobs_started(
+        spark, f"scan-second-{layout}",
+        lambda: loaded.append(load_table(spark, d, "nation"))) == []
+    assert loaded[0].schema == SCHEMAS["nation"]
+    assert loaded[0].count() == 25
+    _fixture_copy(sf_dir, tmp_path, "nation", layout=layout)
+    assert _jobs_started(spark, f"scan-rewrite-{layout}",
+                         lambda: load_table(spark, d, "nation"))
+    _fixture_copy(sf_dir, tmp_path, "nation",
+                  cast={"n_regionkey": pa.int64()}, layout=layout)
+    with pytest.raises(ValueError, match="'nation'"):
+        load_table(spark, d, "nation")
+
+
+def test_nanos_events_load_through_the_fallback(spark, sf_dir, tmp_path):
+    """A legacy ``events`` file storing ``ts`` as TIMESTAMP(NANOS) loads
+    with the declared schema: ``ts`` is ``timestamp_ntz``, truncated to
+    the microsecond."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hippo_claim_crossover_spark.io import SCHEMAS
+
+    tbl = pq.read_table(f"{sf_dir}/events.parquet")
+    i = tbl.schema.get_field_index("ts")
+    us = tbl.column("ts").cast(pa.int64())
+    ns = pc.add(pc.multiply(us, 1000), 999).cast(pa.timestamp("ns"))
+    pq.write_table(tbl.set_column(i, "ts", ns),
+                   str(tmp_path / "events.parquet"))
+    assert pq.ParquetFile(str(tmp_path / "events.parquet")).schema_arrow \
+        .field("ts").type == pa.timestamp("ns")
+
+    got = load_table(spark, str(tmp_path), "events")
+    assert got.schema == SCHEMAS["events"]
+    want = load_table(spark, sf_dir, "events")
+    assert (got.orderBy("event_id").collect()
+            == want.orderBy("event_id").collect())

@@ -776,3 +776,63 @@ def test_asof_nearest_matches_pandas_merge_asof(spark):
     want = {int(r.lid): (None if pd.isna(r.rid) else int(r.rid))
             for r in m.itertuples()}
     assert got == want
+
+
+def test_range_operators_exact_when_range_sample_is_partial(spark):
+    """The range-shuffle operators stay exact when the input is larger
+    than Spark's range sample (few output partitions, many rows per
+    input partition) and carries columns outside the key. The sample is
+    then random per evaluation, so the rows and the per-partition
+    counts must come from one evaluation of the range shuffle."""
+    from hippo_claim_crossover_spark.operators.ranking import (
+        distributed_ntile,
+        global_cumsum,
+        global_rank,
+        grouped_global_rank,
+        grouped_histogram_cdf,
+    )
+
+    n = 20000
+    df = (spark.range(0, n, 1, 8)
+          .withColumn("g", (F.col("id") % 3).cast("string"))
+          .withColumn("v", F.abs(F.hash("id")) % 1000)
+          .withColumn("a", F.col("id") % 7)
+          .withColumn("pad", F.sha2(F.col("id").cast("string"), 256)))
+    rows = [(r["id"], r["g"], r["v"], r["a"], r["pad"])
+            for r in df.collect()]
+    by_v = sorted(rows, key=lambda r: (r[2], r[0]))
+    want_rank = {r[0]: i + 1 for i, r in enumerate(by_v)}
+    want_cum, cum = {}, 0
+    for r in by_v:
+        cum += r[3]
+        want_cum[r[0]] = cum
+    want_grank: dict[int, int] = {}
+    seen: dict[str, int] = {}
+    for r in sorted(rows, key=lambda r: (r[1], r[2], r[0])):
+        seen[r[1]] = seen.get(r[1], 0) + 1
+        want_grank[r[0]] = seen[r[1]]
+    pads = {r[0]: r[4] for r in rows}
+
+    got = global_rank(df, ["v", "id"], n_partitions=4).collect()
+    assert {r["id"]: r["_rank"] for r in got} == want_rank
+    assert {r["id"]: r["pad"] for r in got} == pads
+    got = distributed_ntile(df, 10, ["v", "id"], n_partitions=4).collect()
+    assert {r["id"]: r["bucket"] for r in got} == {
+        i: (k - 1) // (n // 10) + 1 for i, k in want_rank.items()}
+    got = global_cumsum(df, ["v", "id"], ["a"], n_partitions=4).collect()
+    assert {r["id"]: r["_cum_a"] for r in got} == want_cum
+    assert {r["id"]: r["pad"] for r in got} == pads
+    got = grouped_global_rank(df, ["g"], ["v", "id"],
+                              n_partitions=4).collect()
+    assert {r["id"]: r["_rank"] for r in got} == want_grank
+    assert {r["id"]: r["pad"] for r in got} == pads
+    hist = df.withColumnRenamed("a", "_cnt")
+    got = grouped_histogram_cdf(hist, ["g"], "id",
+                                n_partitions=4).collect()
+    want_gcum: dict[int, int] = {}
+    acc: dict[str, int] = {}
+    for r in sorted(rows, key=lambda r: (r[1], r[0])):
+        acc[r[1]] = acc.get(r[1], 0) + r[3]
+        want_gcum[r[0]] = acc[r[1]]
+    assert {r["id"]: r["_cum"] for r in got} == want_gcum
+    assert {r["id"]: r["pad"] for r in got} == pads

@@ -2267,8 +2267,8 @@ def test_sink_pyds_stream_batches_survive_and_round_trip(spark):
         assert r["n_events"] == truth[r["event_type"]]["n"], r
         assert r["sum_micros"] == truth[r["event_type"]]["s"], r
     # inspect the sink directory the run materialized
-    from hippo_claim_crossover_spark.plans.sources import _SCRATCH, _tag
-    out = os.path.join(_SCRATCH, f"src_pydsws-{_tag(spark, SF_DIR)}")
+    from hippo_claim_crossover_spark.plans.sources import last_written
+    out = last_written(spark, SF_DIR, "pydsws")
     manifests = sorted(glob.glob(os.path.join(out, "_SUCCESS-*")))
     assert len(manifests) == 3, manifests
     named = set()
